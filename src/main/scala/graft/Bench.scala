@@ -199,7 +199,7 @@ object Bench {
     // boilerplate shingle sets / LSH candidates cached through the scaling
     // section that follows in this session
     var bsets: Option[org.apache.spark.sql.DataFrame] = None
-    var lshCand: Option[org.apache.spark.sql.DataFrame] = None
+    var lsh: Option[graft.pipeline.Cached[org.apache.spark.sql.DataFrame]] = None
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val boiler = graft.operators.Dedup.cloneBoilerplate(docs, copies = 399, every = 20)
@@ -239,12 +239,14 @@ object Bench {
           loads += loadavg()
           val (ne, te) = t1(graft.operators.Dedup.jaccardPairs(bs, 0.6).count())
           nEx = ne; exT += te
-          var cand: Option[org.apache.spark.sql.DataFrame] = None
-          val (nl, tl) = t1(graft.operators.Dedup
-            .minhashLsh(bs, 0.6, 64, 16, onCache = c => { cand = Some(c); lshCand = Some(c) })
-            .count())
+          val (nl, tl) = t1 {
+            val r = graft.operators.Dedup.minhashLsh(bs, 0.6, 64, 16)
+            lsh = Some(r)
+            r.value.count()
+          }
           nLsh = nl; lshT += tl
-          cand.foreach(_.unpersist(false)) // each run re-derives its own candidates
+          lsh.foreach(_.release()) // each run re-derives its own candidates
+          lsh = None
         }
         HeavyRound(exT.toSeq, lshT.toSeq, loads.toSeq, nEx, nLsh)
       }
@@ -277,7 +279,7 @@ object Bench {
       System.err.println(s"[bench] dedup_heavy FAILED: ${e.getMessage}")
       errors("dedup_heavy") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
     } finally {
-      lshCand.foreach(_.unpersist(false))
+      lsh.foreach(_.release())
       bsets.foreach(_.unpersist(false))
     }
 

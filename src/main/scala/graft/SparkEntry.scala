@@ -1,6 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Candidates, GraftConfig, Scoring}
 import graft.fixtures.Synth
 import graft.operators.{Dedup, GraphOps, Multimodal, Similarity, TextStats, Timeseries}
-import graft.pipeline.{KgPipeline, Scorer, TranscriptSource, TripleEmitter}
+import graft.pipeline.{ConnectedComponents, KgPipeline, Scorer, TranscriptSource, TripleEmitter}
+import graft.SessionMemo.{Held, memo}
 
 /** Driver contract (SURVEY.md §7; see Verify/Bench).
   *
@@ -41,49 +41,39 @@ object SparkEntry {
     Synth.Spec(nConv = math.max(100, (sf * 100000).toInt))
   }
 
-  private val kgCache = new ConcurrentHashMap[String, KgPipeline.Outputs]()
-  private val writtenTriples = new ConcurrentHashMap[String, String]()
-
-  /** Pred-partitioned triples sink on disk, written once per (session, sf);
-    * both 1-hop queries read it back so the partition-pruned scan is real. */
-  private def triplesSink(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_triples_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writtenTriples.computeIfAbsent(path + "@" + s.hashCode(), _ => {
+  /** Pred-partitioned triples sink on disk, written once per session and
+    * sf into a directory the session's memo owns; both 1-hop queries read
+    * it back so the partition-pruned scan is real. */
+  private def triplesSink(s: SparkSession, dir: String): String =
+    memo(s, "triples:" + dir)(Held.tmpDir("graft_triples_") { path =>
       TripleEmitter.write(kg(s, dir).triples, path); path
     })
-  }
 
-  /** Co-mention pairs (entity_a < entity_b, n_turns), memoized + persisted
-    * per (session, dir): the turn-hub self-join feeds four graph queries
+  /** Co-mention pairs (entity_a < entity_b, n_turns), memoized per
+    * (session, dir): the turn-hub self-join feeds four graph queries
     * (comention, triangles, entity_sim, relatedEntities), and operators
     * like triangleCounts reference their edge input several times — an
     * unmemoized frame re-ran the self-join per lineage reference (measured
     * 12.9 s kg_triangles at sf0.1; ~1 s on the persisted pairs). */
-  private val comentionCache = new ConcurrentHashMap[String, DataFrame]()
   private def comentionPairs(s: SparkSession, dir: String): DataFrame =
-    comentionCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
-      // eager localCheckpoint, NOT persist+count: under persist the frame
-      // keeps its full logical lineage (the whole kg pipeline), and the
-      // nine graph queries reading this memo re-ANALYZE that giant subtree
-      // several times each (both union orientations, join sides…) — with
-      // tiny data the driver-side planning was the dominant wall (guide
-      // §7.3; kg_triangles 7.8 s warm for 88 output rows). The checkpoint
-      // turns every reference into an ExistingRDD scan; rows unchanged.
-      GraphOps.coMentions(
-        kg(s, dir).triples.select("subj", "pred", "obj")).localCheckpoint(true)
-    })
+    // eager localCheckpoint, NOT persist+count: under persist the frame
+    // keeps its full logical lineage (the whole kg pipeline), and the
+    // nine graph queries reading this memo re-ANALYZE that giant subtree
+    // several times each (both union orientations, join sides…) — with
+    // tiny data the driver-side planning was the dominant wall (guide
+    // §7.3; kg_triangles 7.8 s warm for 88 output rows). The checkpoint
+    // turns every reference into an ExistingRDD scan; rows unchanged.
+    memo(s, "comention:" + dir)(Held.checkpoint(
+      GraphOps.coMentions(kg(s, dir).triples.select("subj", "pred", "obj"))))
 
   /** Compacted twin of the triples sink, built once per (session, sf):
     * the bin-packed, subj-sorted rewrite TripleEmitter.compact produces.
     * The gate reads THIS store against the same golden-oracle twin as the
     * live sink — content preservation under re-layout is the property. */
-  private val compactedTriples = new ConcurrentHashMap[String, String]()
   private def compactedSink(s: SparkSession, dir: String): String = {
     val src = triplesSink(s, dir)
-    compactedTriples.computeIfAbsent(src + "@" + s.hashCode(), _ => {
-      val out = src + "_compacted"
-      TripleEmitter.compact(s, src, out)
-      out
+    memo(s, "compacted:" + dir)(Held.tmpDir("graft_compacted_") { out =>
+      TripleEmitter.compact(s, src, out); out
     })
   }
 
@@ -95,17 +85,16 @@ object SparkEntry {
     * MIXED store: hot partitions re-packed, cold partitions byte-untouched
     * (file identity verified by the operator and required here). The gate
     * reads the mixed store against the same golden twin as the live sink. */
-  private val incCompactedTriples = new ConcurrentHashMap[String, String]()
   private def incCompactedSink(s: SparkSession, dir: String): String = {
     val src = triplesSink(s, dir)
-    incCompactedTriples.computeIfAbsent(src + "@" + s.hashCode(), _ => {
-      val out = src + "_inccompact"
+    memo(s, "inccompact:" + dir)(Held.tmpDir("graft_inccompact_") { root =>
+      // the store sits one level down: compactIncremental stages beside it
+      val out = root + "/store"
       val conf = s.sparkContext.hadoopConfiguration
       val srcP = new org.apache.hadoop.fs.Path(src)
       val fs = srcP.getFileSystem(conf)
-      val outP = new org.apache.hadoop.fs.Path(out)
-      fs.delete(outP, true)
-      org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs, outP, false, conf)
+      org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs, new org.apache.hadoop.fs.Path(out),
+        false, conf)
       val counts = TripleEmitter.partitionFileCounts(s, out).values.toSeq.sorted
       // midrange threshold: min <= thr < max whenever counts differ, so the
       // hot set (> thr) and the cold set (<= thr) are BOTH nonempty — a
@@ -120,7 +109,7 @@ object SparkEntry {
     })
   }
 
-  /** Checkpoint the five output frames of a pipeline run for the memo:
+  /** A pipeline run held by the memo with its five outputs replaced by
     * eager localCheckpoints, NOT persists. A persisted frame keeps its full
     * logical lineage — the whole pipeline plan — and every kg_* query
     * referencing the memo re-ANALYZES that giant subtree per reference;
@@ -128,90 +117,49 @@ object SparkEntry {
     * of the graph-query family (guide §7.3: kg_pagerank_directed 4.2 s of
     * which < 0.5 s compute). Checkpoints turn each reference into an
     * ExistingRDD scan. decisionStats is re-derived from the CHECKPOINTED
-    * decisions so its lineage collapses too. The pipeline-internal caches
-    * still travel in `cached` and are released with the run. */
-  private def checkpointOutputs(out: KgPipeline.Outputs): KgPipeline.Outputs = {
-    val mentions = out.mentions.localCheckpoint(true)
-    val decisions = out.decisions.localCheckpoint(true)
-    KgPipeline.Outputs(
-      mentions, decisions,
-      out.components.localCheckpoint(true), out.triples.localCheckpoint(true),
+    * decisions so its lineage collapses too. Release frees the run itself
+    * (its persisted outputs and internal stage caches) and the RDD blocks
+    * of the checkpoints, including a distributed components result's own. */
+  private def checkpointed(run: KgPipeline.Outputs): Held[KgPipeline.Outputs] = {
+    val decisions = run.decisions.localCheckpoint(true)
+    val out = KgPipeline.Outputs(
+      run.mentions.localCheckpoint(true), decisions,
+      run.components.localCheckpoint(true), run.triples.localCheckpoint(true),
       // decisionStats stays LAZY: derived from the checkpointed decisions its
       // lineage is one ExistingRDD scan deep (nothing left to re-plan), and
       // an eager checkpoint here put its TakeOrdered + aggregate jobs inside
       // every timed kg() build (bench kg_cold/kg_warm) for a frame only the
       // kg_decision_stats query reads
-      KgPipeline.decisionStats(decisions), out.cached)
-  }
-
-  /** Free a memoized run: the pipeline-internal caches via release(), then
-    * the checkpointed output frames' own RDD blocks (unpersist is a no-op
-    * on a checkpointed frame — releaseResult drops the LogicalRDD blocks). */
-  private def releaseOutputs(o: KgPipeline.Outputs): Unit = {
-    import graft.pipeline.ConnectedComponents.releaseResult
-    o.release()
-    Seq(o.mentions, o.decisions, o.components, o.triples, o.decisionStats)
-      .foreach(releaseResult)
+      KgPipeline.decisionStats(decisions), run.cached)
+    Held(out, () => {
+      run.release()
+      Seq(run.components, out.mentions, out.decisions, out.components, out.triples)
+        .foreach(ConnectedComponents.releaseResult)
+    })
   }
 
   /** One pipeline run per (session, sfDir), outputs checkpointed so each
     * kg_* query reads memoized results instead of recomputing — or even
     * re-planning — the DAG. */
   private[graft] def kg(spark: SparkSession, sfDir: String): KgPipeline.Outputs =
-    kgCache.computeIfAbsent(sfDir + "@" + spark.hashCode(), _ => {
+    memo(spark, "kg:" + sfDir) {
       val spec = specFor(sfDir)
       val dict = Synth.dictionary(spec)
       val turns = TranscriptSource.fromSeq(spark, Synth.transcripts(spec, dict))
-      checkpointOutputs(KgPipeline.run(spark, turns, dict, GraftConfig.default))
-    })
-
-  /** Drop one sfDir's memoized pipeline run and free EVERY frame it cached —
-    * the five outputs plus the pipeline's internal stage caches
-    * (entities/entityB/mentionsPrep/mentionB via Outputs.release). Bench
-    * uses this to time a warm second run honestly; long-lived sessions use
-    * it to keep executor storage flat across runs. */
-  private[graft] def clearKg(spark: SparkSession, sfDir: String): Unit =
-    Option(kgCache.remove(sfDir + "@" + spark.hashCode())).foreach(releaseOutputs)
-
-  /** Evict EVERY per-session memo for `spark` — kg runs plus the operator
-    * caches (shingle sets, minhash pairs, prepped embeddings, probes, IVF
-    * index) — unpersisting what they cached. Long-lived drivers that cycle
-    * sessions must call this before stopping one, or the maps accumulate
-    * DataFrame references bound to dead SparkContexts (the caches key on
-    * session hashCode and are never hit again after the session stops).
-    *
-    * Concurrency: each map is drained with repeated filter-remove passes
-    * until a pass removes nothing, so an entry inserted by a still-running
-    * query thread DURING eviction is caught by the next pass instead of
-    * leaking (a single keySet snapshot missed it). The remaining race — an
-    * insert that lands after the final pass — is the caller's contract:
-    * quiesce the session's query threads before clearSession, same as
-    * before SparkSession.stop. */
-  private[graft] def clearSession(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    val sfx = "@" + spark.hashCode()
-    def drain[V](m: ConcurrentHashMap[String, V])(release: V => Unit): Unit = {
-      var removedAny = true
-      while (removedAny) {
-        removedAny = false
-        m.keySet.asScala.filter(_.endsWith(sfx)).toSeq.foreach { k =>
-          Option(m.remove(k)).foreach { v => release(v); removedAny = true }
-        }
-      }
+      checkpointed(KgPipeline.run(spark, turns, dict, GraftConfig.default))
     }
-    drain(kgCache)(releaseOutputs)
-    drain(writtenTriples)(_ => ())
-    drain(compactedTriples)(_ => ())
-    drain(incCompactedTriples)(_ => ())
-    drain(bucketedTables)(_ => ())
-    Seq(setsCache, embCache, probeCache)
-      .foreach(drain(_)(_.unpersist(false)))
-    // these memos are locally checkpointed (not persisted): freeing them
-    // means unpersisting the checkpoint RDD blocks themselves
-    Seq(lshPairsCache, incPairsCache, comentionCache)
-      .foreach(drain(_)(graft.pipeline.ConnectedComponents.releaseResult))
-    drain(ivfCache)(_._2.unpersist(false))
-  }
+
+  /** Drop one sfDir's memoized pipeline run and free EVERY frame it cached.
+    * Bench uses this to time a warm second run honestly. */
+  private[graft] def clearKg(spark: SparkSession, sfDir: String): Unit =
+    SessionMemo.clear(spark, "kg:" + sfDir)
+
+  /** Drop every memo `spark` holds — kg runs, operator frames, sink
+    * directories, catalog tables — and free what each stored. Long-lived
+    * drivers must call this before stopping a session, with the session's
+    * query threads quiesced (see SessionMemo). */
+  private[graft] def clearSession(spark: SparkSession): Unit =
+    SessionMemo.clearSession(spark)
 
   /** zh-mixed corpus scale: smaller than the Latin corpus (it gates the CJK
     * mention semantics, not throughput) but still sf-scaled. */
@@ -222,15 +170,14 @@ object SparkEntry {
   }
 
   /** zh/en mixed pipeline run (unsegmented Chinese mentions — the corpus
-    * shape of the reference's own seed data), memoized like `kg` under a
-    * "zh:"-prefixed key so clearSession releases it too. */
+    * shape of the reference's own seed data), memoized like `kg`. */
   private[graft] def kgZh(spark: SparkSession, sfDir: String): KgPipeline.Outputs =
-    kgCache.computeIfAbsent("zh:" + sfDir + "@" + spark.hashCode(), _ => {
+    memo(spark, "kg_zh:" + sfDir) {
       val spec = zhSpecFor(sfDir)
       val dict = Synth.zhDictionary(spec)
       val turns = TranscriptSource.fromSeq(spark, Synth.zhTranscripts(spec, dict))
-      checkpointOutputs(KgPipeline.run(spark, turns, dict, GraftConfig.default))
-    })
+      checkpointed(KgPipeline.run(spark, turns, dict, GraftConfig.default))
+    }
 
   /** Flagship: end-to-end KG triples on a small fixed corpus. */
   def entry(spark: SparkSession): DataFrame =
@@ -261,20 +208,17 @@ object SparkEntry {
     * them several times (sizes + two join sides + signatures), so the frame
     * is memoized per (session, dir) and persisted — recomputing it 3-4x per
     * query was the dominant cost of round 1's dedup benches. */
-  private[graft] val setsCache = new ConcurrentHashMap[String, DataFrame]()
   private def shingleSets(s: SparkSession, dir: String): DataFrame =
-    setsCache.computeIfAbsent(dir + "@" + s.hashCode(), _ =>
-      Dedup.shingleSets(tbl(s, dir, "documents"), n = 3, maxDf = 50L).persist())
+    memo(s, "sets:" + dir)(
+      Held.persist(Dedup.shingleSets(tbl(s, dir, "documents"), n = 3, maxDf = 50L)))
 
   /** MinHash-LSH verified pairs, memoized per (session, dir): the result is
-    * materialized eagerly so the operator's internal persisted candidate
-    * frame can be released immediately (otherwise one bucket-scale frame per
-    * call stays cached for the session — the leak the onCache hook exists
-    * to close); repeat queries then read the tiny persisted pair frame. */
-  private val lshPairsCache = new ConcurrentHashMap[String, DataFrame]()
+    * materialized eagerly so the frames the operator persisted can be
+    * released immediately (otherwise one bucket-scale frame per call stays
+    * cached for the session); repeat queries then read the tiny
+    * checkpointed pair frame. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    lshPairsCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
-      val cached = scala.collection.mutable.Buffer[DataFrame]()
+    memo(s, "lsh_pairs:" + dir) {
       // 128/32 pinned HERE (not the 64/16 default): this surface is gated by
       // an exact-equality DuckDB twin, and 128 hashes square the per-pair
       // band-miss probability (j=0.80 -> ~5e-8 vs 2.2e-4 at 64) so a future
@@ -283,11 +227,11 @@ object SparkEntry {
       // eager localCheckpoint (not persist+count): five queries reference
       // this memo and re-analyzed the full signature/verify lineage each
       // time under persist (guide §7.3, same move as comentionPairs)
-      val out = Dedup.minhashLsh(shingleSets(s, dir), 0.6, numHashes = 128, bands = 32,
-        onCache = cached += _).localCheckpoint(true)
-      cached.foreach(_.unpersist(false))
+      val lsh = Dedup.minhashLsh(shingleSets(s, dir), 0.6, numHashes = 128, bands = 32)
+      val out = Held.checkpoint(lsh.value)
+      lsh.release()
       out
-    })
+    }
 
   /** Incremental-dedup pairs, memoized per (session, dir). Exercises the
     * full production shape end to end: the kept corpus (a deterministic
@@ -296,49 +240,46 @@ object SparkEntry {
     * per-crawl-drop pipeline keeps between batches — and the "new batch"
     * (the other 20%) computes only its own signatures and bucket-joins the
     * index. 128/32 pinned for the same gate-immunity math as
-    * `minhashPairs`. Same eager-materialize + candidate-release treatment. */
-  private val incPairsCache = new ConcurrentHashMap[String, DataFrame]()
+    * `minhashPairs`. Same eager-materialize + release treatment; the index
+    * directory lives as long as the memo entry. */
   private def incrementalPairs(s: SparkSession, dir: String): DataFrame =
-    incPairsCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+    memo(s, "inc_pairs:" + dir) {
       val sets = shingleSets(s, dir)
       val isOld = graft.operators.Corpus.splitResidue(col("doc_id")) < 80
       val oldSets = sets.filter(isOld)
       val newSets = sets.filter(!isOld)
-      val idxPath =
-        s"/tmp/graft_lsh_index_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      Dedup.bandedSignatures(oldSets, 128, 32)
-        .write.mode("overwrite").parquet(idxPath)
-      val cached = scala.collection.mutable.Buffer[DataFrame]()
-      val out = Dedup.incrementalLsh(oldSets, newSets, 0.6,
-          numHashes = 128, bands = 32,
-          indexBanded = Some(s.read.parquet(idxPath)),
-          onCache = cached += _).localCheckpoint(true)
-      cached.foreach(_.unpersist(false))
-      out
-    })
+      val index = Held.tmpDir("graft_lsh_index_") { idxPath =>
+        Dedup.bandedSignatures(oldSets, 128, 32)
+          .write.mode("overwrite").parquet(idxPath)
+        idxPath
+      }
+      val lsh = Dedup.incrementalLsh(oldSets, newSets, 0.6,
+        numHashes = 128, bands = 32,
+        indexBanded = Some(s.read.parquet(index.value)))
+      val out = Held.checkpoint(lsh.value)
+      lsh.release()
+      Held(out.value, () => { out.release(); index.release() })
+    }
 
   /** Prepped embeddings (double cast + l2 norm) are memoized per
     * (session, dir) and persisted, same treatment as shingleSets: four
     * ann/dedup queries otherwise rescan and re-norm the embeddings table
     * (round-2's dedup_embed_cosine regression was exactly this recompute). */
-  private val embCache = new ConcurrentHashMap[String, DataFrame]()
   private def prepEmb(s: SparkSession, dir: String): DataFrame =
-    embCache.computeIfAbsent(dir + "@" + s.hashCode(), _ =>
-      Similarity.prep(tbl(s, dir, "embeddings")).persist())
+    memo(s, "emb:" + dir)(Held.persist(Similarity.prep(tbl(s, dir, "embeddings"))))
 
   /** IVF index (Lloyd model + cell-assigned corpus) memoized per
     * (session, dir): the model build walks the corpus iters+1 times, and
     * three driver queries (ivf_topk, ivf_recall twice) would otherwise each
     * rebuild it from scratch. The assigned frame is persisted — it IS the
     * index. */
-  private val ivfCache =
-    new ConcurrentHashMap[String, (Array[(Int, Array[Double])], DataFrame)]()
   private def ivfIndex(s: SparkSession, dir: String): (Array[(Int, Array[Double])], DataFrame) =
-    ivfCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+    memo(s, "ivf:" + dir) {
       val corpus = prepEmb(s, dir)
       val model = Similarity.kmeans(corpus, 8, 3)
-      (model, Similarity.ivfAssign(corpus, model).persist())
-    })
+      val assigned = Held.persist(Similarity.ivfAssign(corpus, model))
+      Held((model, assigned.value), assigned.release)
+    }
 
   /** Engine-derived auxiliary dumps for twins that re-derive a gated result
     * from a model artifact (Verify writes them to the `{AUX}` dir): the IVF
@@ -360,20 +301,26 @@ object SparkEntry {
     * per (session, sf): both sides bucketBy the join key into the same
     * bucket count so the recurring 1-hop join is co-located — zero
     * exchanges at query time (plan-gated in PlanSpec). Returns the table
-    * name suffix. */
-  private val bucketedTables = new ConcurrentHashMap[String, String]()
-  private def bucketedOnehopTables(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    bucketedTables.computeIfAbsent(tag + "@" + s.hashCode(), _ => {
-      graft.pipeline.BucketedStore.writeBucketed(
-        tbl(s, dir, "events").select("event_id", "user_id", "event_type", "value"),
-        s"graft_ev_$tag", s"/tmp/graft_bucketed_$tag/events", "user_id", 8)
-      graft.pipeline.BucketedStore.writeBucketed(
-        tbl(s, dir, "customer").select("c_custkey", "c_name"),
-        s"graft_cust_$tag", s"/tmp/graft_bucketed_$tag/customer", "c_custkey", 8)
-      tag
-    })
-  }
+    * name suffix, unique to the entry's directory so sessions sharing a
+    * catalog never collide; release drops both tables, then the data. */
+  private def bucketedOnehopTables(s: SparkSession, dir: String): String =
+    memo(s, "bucketed:" + dir) {
+      val files = Held.tmpDir("graft_bucketed_") { root =>
+        val tag = new java.io.File(root).getName.stripPrefix("graft_bucketed_")
+        graft.pipeline.BucketedStore.writeBucketed(
+          tbl(s, dir, "events").select("event_id", "user_id", "event_type", "value"),
+          s"graft_ev_$tag", s"$root/events", "user_id", 8)
+        graft.pipeline.BucketedStore.writeBucketed(
+          tbl(s, dir, "customer").select("c_custkey", "c_name"),
+          s"graft_cust_$tag", s"$root/customer", "c_custkey", 8)
+        tag
+      }
+      val tag = files.value
+      Held(tag, () => {
+        Seq(s"graft_ev_$tag", s"graft_cust_$tag").foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+        files.release()
+      })
+    }
 
   /** zh/mixed documents-table size, sf-scaled like the other fixtures. */
   private[graft] def zhDocCountFor(sfDir: String): Int = {
@@ -401,16 +348,15 @@ object SparkEntry {
   /** Perturbed probe vectors planted from the corpus (vec_id%10==0):
     * probe = [v1+0.05, v2..v64], probe_id = vec_id+100000. Memoized +
     * persisted per (session, dir) like prepEmb. */
-  private val probeCache = new ConcurrentHashMap[String, DataFrame]()
   private def plantedProbes(s: SparkSession, dir: String): DataFrame =
-    probeCache.computeIfAbsent(dir + "@" + s.hashCode(), _ => {
+    memo(s, "probes:" + dir) {
       val e = tbl(s, dir, "embeddings").filter(col("vec_id") % 10 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"),
           Similarity.dvec(col("embedding")).as("v0"))
         .select(col("vec_id"),
           concat(array(element_at(col("v0"), 1) + lit(0.05)), slice(col("v0"), 2, 63)).as("v"))
-      e.withColumn("nrm", Similarity.l2norm(col("v"))).persist()
-    })
+      Held.persist(e.withColumn("nrm", Similarity.l2norm(col("v"))))
+    }
 
   /** X13 similarity-details + X14 reasoning projection over a decisions
     * frame (reference disambiguation.py:439-463 and :388-407) — shared

@@ -73,9 +73,11 @@ object CcBench {
     val mentionsPrep = Scorer.prepareMentions(mentions, cfg)
       .select(Scorer.mentionPrepCols.map(col): _*).cache()
     val entityB = Blocking.entityBlocks(entities, cfg).cache()
-    val decisions = KgPipeline.decideTier(spark, mentions, mentionsPrep, entities,
-      entityB, dict.size.toLong, cfg).persist()
+    val decided = KgPipeline.decideTier(spark, mentions, mentionsPrep, entities,
+      entityB, dict.size.toLong, cfg)
+    val decisions = decided.value.persist()
     val (nDecisions, tScore) = timed(decisions.count())
+    decided.release()
 
     val edges = Scorer.entityDupEdges(entityB, entities, cfg).persist()
     val (nEdges, tEdges) = timed(edges.count())

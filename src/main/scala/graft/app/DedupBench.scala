@@ -46,10 +46,9 @@ object DedupBench {
       val nDocs = corpus.count()
       val nSets = sets.count() // materialize before timing
       val (nEx, tEx) = time(Dedup.jaccardPairs(sets, 0.6).count())
-      val cand = scala.collection.mutable.Buffer[DataFrame]()
-      val (nLsh, tLsh) =
-        time(Dedup.minhashLsh(sets, 0.6, numHashes, bands, onCache = cand += _).count())
-      cand.foreach(_.unpersist(false))
+      val lsh = Dedup.minhashLsh(sets, 0.6, numHashes, bands)
+      val (nLsh, tLsh) = time(lsh.value.count())
+      lsh.release()
       println(f"$label: docs=$nDocs setRows=$nSets maxDf=$maxDf h=$numHashes/b=$bands " +
         f"exhaustive=${tEx}%.2fs ($nEx pairs) lsh=${tLsh}%.2fs ($nLsh pairs) " +
         f"speedup=${tEx / tLsh}%.2fx equal=${nEx == nLsh}")

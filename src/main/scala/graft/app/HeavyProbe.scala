@@ -30,10 +30,9 @@ object HeavyProbe {
     }
     (1 to rounds).foreach { r =>
       val te = t1(graft.operators.Dedup.jaccardPairs(bs, 0.6).count())
-      val cand = scala.collection.mutable.Buffer[org.apache.spark.sql.DataFrame]()
-      val tl = t1(graft.operators.Dedup.minhashLsh(bs, 0.6, 64, 16,
-        onCache = cand += _).count())
-      cand.foreach(_.unpersist(false))
+      val lsh = graft.operators.Dedup.minhashLsh(bs, 0.6, 64, 16)
+      val tl = t1(lsh.value.count())
+      lsh.release()
       println(f"[heavy] round $r ex=$te%.2f lsh=$tl%.2f x=${te / tl}%.2f")
     }
     spark.stop()

@@ -81,11 +81,11 @@ object IncBench {
     val (nOldRows, nNewRows) = (oldSets.count(), newSets.count())
 
     // FULL: what a pipeline without an index pays per drop
-    val fullCand = scala.collection.mutable.Buffer[DataFrame]()
-    val ((fullPairs, tFull), bFull) = shuffled(time {
-      val p = Dedup.minhashLsh(sets, 0.6, onCache = fullCand += _).persist()
-      p.count(); p
+    val ((full, tFull), bFull) = shuffled(time {
+      val r = Dedup.minhashLsh(sets, 0.6)
+      r.value.persist().count(); r
     })
+    val fullPairs = full.value
 
     // INDEX: the one-time corpus-side cost (parquet-backed, reusable)
     val idxPath = "/tmp/graft_incbench_index"
@@ -111,15 +111,14 @@ object IncBench {
       System.err.println(f"[profile] new_sig=$tNewSig%.2f idx_scan=$tIdxScan%.2f " +
         f"cand=$tCand%.2f ($nc) verify=$tVerify%.2f")
     }
-    val incCached = scala.collection.mutable.Buffer[DataFrame]()
-    val ((incPairs, tInc), bInc) = shuffled(time {
-      val p = Dedup.incrementalLsh(oldSets, newSets, 0.6,
-        indexBanded = Some(spark.read.parquet(idxPath)),
-        onCache = incCached += _).persist()
-      p.count(); p
+    val ((inc, tInc), bInc) = shuffled(time {
+      val r = Dedup.incrementalLsh(oldSets, newSets, 0.6,
+        indexBanded = Some(spark.read.parquet(idxPath)))
+      r.value.persist().count(); r
     })
-    fullCand.foreach(_.unpersist(false))
-    incCached.foreach(_.unpersist(false))
+    val incPairs = inc.value
+    full.release()
+    inc.release()
 
     // exact consistency: inc == full minus old×old
     val oldFlag = (c: String) => Corpus.splitResidue(col(c)) < (100 - batchPct)
@@ -152,15 +151,12 @@ object IncBench {
     val streamedPairs = spark.read.parquet(s"$outStream/batch_id=1")
       .select("doc_a", "doc_b")
     val setsU = Dedup.shingleSets(boiler, 3, Long.MaxValue).persist()
-    val refCached = scala.collection.mutable.Buffer[DataFrame]()
-    val refPairs = Dedup.incrementalLsh(
-        setsU.filter(isOld), setsU.filter(!isOld), 0.6,
-        onCache = refCached += _)
-      .select("doc_a", "doc_b").persist()
+    val ref = Dedup.incrementalLsh(setsU.filter(isOld), setsU.filter(!isOld), 0.6)
+    val refPairs = ref.value.select("doc_a", "doc_b").persist()
     val sMissing = refPairs.except(streamedPairs).count()
     val sExtra = streamedPairs.except(refPairs).count()
     val nStreamed = streamedPairs.count()
-    refCached.foreach(_.unpersist(false))
+    ref.release()
     refPairs.unpersist(false)
     setsU.unpersist(false)
 

@@ -24,10 +24,9 @@ object LshProbe {
       cand.unpersist(true)
     }
     t("jaccardPairs (exhaustive)")(Dedup.jaccardPairs(sets, 0.6).count())
-    val lshCached = scala.collection.mutable.Buffer[org.apache.spark.sql.DataFrame]()
-    t("minhashLsh default warm")(
-      Dedup.minhashLsh(sets, 0.6, onCache = lshCached += _).count())
-    lshCached.foreach(_.unpersist(false))
+    val lsh = Dedup.minhashLsh(sets, 0.6)
+    t("minhashLsh default warm")(lsh.value.count())
+    lsh.release()
     spark.stop()
   }
 }

@@ -45,9 +45,9 @@ object LshStageProbe {
     }
     t("verify (jaccardForPairs)") { noop(Dedup.jaccardForPairs(sets, cand, 0.6)) }
     t("full minhashLsh") {
-      val c = scala.collection.mutable.Buffer[org.apache.spark.sql.DataFrame]()
-      noop(Dedup.minhashLsh(sets, 0.6, numHashes, bands, onCache = c += _))
-      c.foreach(_.unpersist(false))
+      val lsh = Dedup.minhashLsh(sets, 0.6, numHashes, bands)
+      noop(lsh.value)
+      lsh.release()
     }
     spark.stop()
   }

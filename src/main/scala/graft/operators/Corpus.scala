@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   */
 object Corpus {
 
+  /** Merge rounds between bpeMerges' vocabulary checkpoints. */
+  private val BpeCheckpointEvery = 3
+
   /** Greedy sequence packing by running token count: documents are laid
     * out in (strata, doc_id) order and cut into fixed-size token blocks —
     * block_id = floor(exclusive-cumsum / blockSize), the streaming-concat
@@ -113,7 +116,7 @@ object Corpus {
     * Returns (merge_round, lhs, rhs, cnt) — the learned merge table, the
     * artifact a tokenizer trainer actually emits. Stops early if no pair
     * remains. */
-  def bpeMerges(docs: DataFrame, rounds: Int, checkpointEvery: Int = 3): DataFrame = {
+  def bpeMerges(docs: DataFrame, rounds: Int): DataFrame = {
     import graft.pipeline.ConnectedComponents.releaseResult
     val spark = docs.sparkSession
     import spark.implicits._
@@ -129,7 +132,7 @@ object Corpus {
     // checkpoint is vocab-scale ALU — a checkpoint (one materialization job
     // + stored blocks) every round bought nothing but the job overhead
     // (measured: the per-round jobs, not the aggregate, dominated the wall
-    // at bench scale). Checkpoint every `checkpointEvery` merges instead;
+    // at bench scale). Checkpoint every BpeCheckpointEvery merges instead;
     // the release discipline (free the superseded generation) is unchanged.
     var lastCp = wf
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
@@ -152,7 +155,7 @@ object Corpus {
         merges += ((r.toLong, l, rr, c))
         wf = wf.select(replace(col("w"), lit(s"|$l||$rr|"), lit(s"|$l$rr|")).as("w"),
           col("freq"))
-        if (r % checkpointEvery == 0 && r < rounds) {
+        if (r % BpeCheckpointEvery == 0 && r < rounds) {
           val c2 = wf.localCheckpoint(true)
           releaseResult(lastCp)
           lastCp = c2

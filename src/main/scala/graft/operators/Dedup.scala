@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
 
+import graft.pipeline.Cached
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Five families, cheapest-first, each a declarative Catalyst plan:
@@ -347,22 +349,20 @@ object Dedup {
 
   /** MinHash-LSH near-dup pairs with exact-jaccard verification of the
     * LSH candidates: the LSH-candidate ∩ (jaccard >= tau) set. Equals the
-    * exhaustive join wherever band recall is 1 (see class doc). The
-    * candidate frame is persisted — the verify step reads it three times
-    * (doc-id prune twice, intersection join once), and recomputing it
-    * re-runs the whole signature/banding chain each time. The persisted
-    * frame is handed to `onCache` so owners can unpersist it once the
-    * result is materialized (Bench/DedupBench do; one bucket-scale frame
-    * per call otherwise stays cached for the session). Skipped degenerate
-    * buckets are counted in the named accumulator
+    * exhaustive join wherever band recall is 1 (see class doc). Two frames
+    * are persisted and returned in `cached` with the lazy pair frame: the
+    * candidates (the verify step reads them three times — doc-id prune
+    * twice, intersection join once — and recomputing them re-runs the whole
+    * signature/banding chain each time) and the candidate-pruned verify
+    * corpus. The caller releases both once the pairs are materialized; one
+    * bucket-scale frame per call otherwise stays cached for the session.
+    * Skipped degenerate buckets are counted in the named accumulator
     * "graft.minhash.skipped_buckets" (no silent caps). */
   def minhashLsh(sets: DataFrame, tau: Double, numHashes: Int = 64, bands: Int = 16,
-                 maxBucket: Int = 4096,
-                 onCache: DataFrame => Unit = _ => ()): DataFrame = {
+                 maxBucket: Int = 4096): Cached[DataFrame] = {
     val acc = sets.sparkSession.sparkContext
       .longAccumulator("graft.minhash.skipped_buckets")
     val cand = minhashCandidates(sets, numHashes, bands, maxBucket, Some(acc)).persist()
-    onCache(cand)
     // prune the corpus-scale sets to candidate members ONCE and persist the
     // (candidate-doc-sized) result: jaccardForPairs walks its `sets` input
     // three times (sizes + both intersection sides), and unpersisted, each
@@ -370,14 +370,11 @@ object Dedup {
     // corpus-scale passes for a verify step whose work should scale with
     // |candidates| (the incrementalLsh discipline, now shared). Doc-level
     // pruning keeps every shingle of a kept doc, so sizes and intersections
-    // are unchanged. onCache fires for BOTH persisted frames, verify corpus
-    // LAST (single-slot handlers keep and release the larger frame; the
-    // pair-scale candidates leak at worst).
+    // are unchanged.
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     val verifySets = sets.join(broadcast(candDocs), "doc_id").persist()
-    onCache(verifySets)
-    jaccardForPairs(verifySets, cand, tau)
+    Cached(jaccardForPairs(verifySets, cand, tau), Seq(cand, verifySets))
   }
 
   /** Incremental LSH candidates: pairs touching AT LEAST ONE new document.
@@ -455,25 +452,23 @@ object Dedup {
     * it from several broadcast subtrees, and broadcast exchanges execute
     * as independent jobs that each re-ran the whole candidate chain when
     * it was only lazily persisted — measured 10.7 s fused vs 6.5 s staged
-    * on the 5.1M-row boilerplate corpus. `onCache` fires for BOTH frames
-    * this operator persists (candidates first, then the pruned verify
-    * corpus); callers release them after materializing the result. */
+    * on the 5.1M-row boilerplate corpus. The three frames this operator
+    * persists (batch signatures, candidates, pruned verify corpus) come
+    * back in `cached`; callers release them after materializing the
+    * result. */
   def incrementalLsh(oldSets: DataFrame, newSets: DataFrame, tau: Double,
                      numHashes: Int = 64, bands: Int = 16,
                      maxBucket: Int = 4096,
-                     indexBanded: Option[DataFrame] = None,
-                     onCache: DataFrame => Unit = _ => ()): DataFrame = {
+                     indexBanded: Option[DataFrame] = None): Cached[DataFrame] = {
     val spark = newSets.sparkSession
     val acc = spark.sparkContext.longAccumulator("graft.minhash.incremental_skipped_buckets")
     val idx = indexBanded.getOrElse(bandedSignatures(oldSets, numHashes, bands))
     // the batch signatures feed incrementalCandidates TWICE (the touched-
     // bucket prune and the tagged union) — unpersisted, the whole batch
     // signature aggregation ran twice per call; persist it for the
-    // candidate derivation and hand it to onCache like the other frames
+    // candidate derivation and return it with the other frames
     val newBanded = bandedSignatures(newSets, numHashes, bands).persist()
-    onCache(newBanded)
     val cand = incrementalCandidates(idx, newBanded, maxBucket, Some(acc)).persist()
-    onCache(cand)
     cand.count()
     // the verify corpus: one set per candidate doc, OLD WINS on an id
     // present on both sides (a re-submitted doc keeps its indexed text as
@@ -490,8 +485,7 @@ object Dedup {
     val newPruned = newSets.join(broadcast(candDocs), "doc_id")
       .join(oldPruned.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
     val verifySets = oldPruned.unionByName(newPruned).persist()
-    onCache(verifySets)
-    jaccardForPairs(verifySets, cand, tau)
+    Cached(jaccardForPairs(verifySets, cand, tau), Seq(newBanded, cand, verifySets))
   }
 
   /** Near-dup CLUSTERS over verified pairs — the step an actual corpus

@@ -12,6 +12,9 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  /** Iterations between the PageRank loops' lineage-severing checkpoints. */
+  private val PrCheckpointEvery = 4
+
   /** Co-mention pairs: entities mentioned in the same transcript turn — a
     * 2-hop traversal through the turn hub node (entity <- turn -> entity),
     * the edge-induction step entity-linking pipelines feed into co-occurrence
@@ -212,12 +215,11 @@ object GraphOps {
     * with the (node-sized) rank frame plus one dst-keyed aggregate — at
     * 100 TB the edge list partitioning is reused across iterations and
     * the rank frame is the only thing that changes. Lineage is severed
-    * every `checkpointEvery` rounds (localCheckpoint; same discipline as
+    * every PrCheckpointEvery rounds (localCheckpoint; same discipline as
     * ConnectedComponents — an unsevered K-iteration plan re-analyzes
     * exponentially on real pipeline inputs). */
   def pageRankFp(edges: DataFrame, iterations: Int,
-                 scale: Long = 1000000000000L,
-                 checkpointEvery: Int = 4): DataFrame = {
+                 scale: Long = 1000000000000L): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     // the degree aggregate is EDGE-SCALE and was re-run per reference (the
     // node count, the eDeg invariant join, the rank-init frame) — persist
@@ -242,7 +244,7 @@ object GraphOps {
       .localCheckpoint(true)
     val out = prFixpointLoop(eDeg, "rank div deg",
       deg.select(col("src").as("ent"), lit(r0).as("rank")),
-      lit((15L * r0) / 100L), iterations, checkpointEvery)
+      lit((15L * r0) / 100L), iterations, PrCheckpointEvery)
     deg.unpersist(false)
     out
   }
@@ -337,8 +339,7 @@ object GraphOps {
     * support far beyond any real corpus slice); ANSI arithmetic makes a
     * violation LOUD, never silent. */
   def pageRankWeightedFp(edges: DataFrame, iterations: Int,
-                         scale: Long = 1000000000000L,
-                         checkpointEvery: Int = 4): DataFrame = {
+                         scale: Long = 1000000000000L): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w"))
     // edge-scale aggregate, referenced three times (count, invariant join,
     // rank init) — persisted for the setup, released after the loop
@@ -353,7 +354,7 @@ object GraphOps {
       .localCheckpoint(true)
     val out = prFixpointLoop(eW, "(rank * w) div wsum",
       wsum.select(col("src").as("ent"), lit(r0).as("rank")),
-      lit((15L * r0) / 100L), iterations, checkpointEvery)
+      lit((15L * r0) / 100L), iterations, PrCheckpointEvery)
     wsum.unpersist(false)
     out
   }
@@ -434,8 +435,7 @@ object GraphOps {
     * everything else; superseded rank generations freed in-loop. */
   def personalizedPageRankFp(edges: DataFrame, seeds: DataFrame,
                              iterations: Int,
-                             scale: Long = 1000000000000L,
-                             checkpointEvery: Int = 4): DataFrame = {
+                             scale: Long = 1000000000000L): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     // edge-scale aggregate, referenced by the node frame AND the invariant
     // join — persisted for the setup, released after the loop
@@ -461,7 +461,7 @@ object GraphOps {
       nodes.select(col("ent"), col("is_seed"),
         when(col("is_seed"), lit(r0)).otherwise(lit(0L)).as("rank")),
       when(col("is_seed"), lit(tele)).otherwise(lit(0L)),
-      iterations, checkpointEvery, nodes = Some(nodes))
+      iterations, PrCheckpointEvery, nodes = Some(nodes))
     deg.unpersist(false)
     out
   }

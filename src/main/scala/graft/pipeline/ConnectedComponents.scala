@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * labels(id) starts as id; each round every vertex takes the min of its own
   * label and its neighbors' labels; converged when no label changes. Rounds
   * = graph diameter, which for entity-dedup graphs is tiny (dup clusters are
-  * near-cliques). localCheckpoint every `checkpointEvery` rounds truncates
+  * near-cliques). localCheckpoint every CheckpointEvery rounds truncates
   * the lineage so plans don't grow exponentially — the standard alternating
   * small-star/large-star optimization is unnecessary at these diameters but
   * the checkpoint discipline is the same.
@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   * lexicographic min id of the component.
   */
 object ConnectedComponents {
+
+  /** Rounds between lineage-severing checkpoints of the distributed loop. */
+  private val CheckpointEvery = 3
 
   /** Size-adaptive entry point. The canonicalization graph is dictionary-
     * scale (entity ids + created-surface ids), NOT corpus-scale — at any
@@ -28,13 +31,13 @@ object ConnectedComponents {
     * and does not parallelize). The distributed loop remains the fallback
     * for genuinely huge dictionaries. */
   def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 20,
-          checkpointEvery: Int = 3, driverThreshold: Long = defaultDriverThreshold): DataFrame = {
+          driverThreshold: Long = defaultDriverThreshold): DataFrame = {
     val vs = vertices.select(col("id")).persist()
     val es = edges.select(col("src"), col("dst")).persist()
     val size = vs.count() + es.count()
     val out =
       if (size <= driverThreshold) runDriver(vs, es)
-      else runDistributed(vs, es, maxIter, checkpointEvery)
+      else runDistributed(vs, es, maxIter)
     // runDriver has collected; runDistributed caches its labels — either
     // way the inputs are no longer needed (a cache miss just recomputes)
     vs.unpersist(false)
@@ -70,7 +73,7 @@ object ConnectedComponents {
     }
 
   def runDistributed(vertices: DataFrame, edges: DataFrame, maxIter: Int = 20,
-                     checkpointEvery: Int = 3, onRounds: Int => Unit = _ => ()): DataFrame = {
+                     onRounds: Int => Unit = _ => ()): DataFrame = {
     // SEVER the input lineage before iterating (localCheckpoint, not cache):
     // caching truncates execution but NOT analysis — every round's plan
     // still embeds the producer's full logical plan (scoring UDFs, blocking
@@ -79,7 +82,7 @@ object ConnectedComponents {
     // (measured: rounds of 4.7s -> 16s -> 24s at 17k vertices where the
     // same loop over LocalTableScan inputs takes 3s total — CcBench found
     // this; after severing, rounds are flat ~1s). The per-round
-    // checkpointEvery discipline below bounds the loop's OWN growth.
+    // CheckpointEvery discipline below bounds the loop's OWN growth.
     val bidir = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -101,7 +104,7 @@ object ConnectedComponents {
         .select(col("dst").as("id"), col("component"))
       val next = labels.select("id", "component").union(viaNeighbors)
         .groupBy("id").agg(min("component").as("component"))
-      val atBoundary = (iter + 1) % checkpointEvery == 0
+      val atBoundary = (iter + 1) % CheckpointEvery == 0
       val stepped = if (atBoundary) next.localCheckpoint(true) else next.cache()
       val changed = stepped.join(labels.withColumnRenamed("component", "old"), "id")
         .filter(col("component") =!= col("old")).limit(1).count()

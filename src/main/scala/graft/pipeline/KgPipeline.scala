@@ -24,9 +24,11 @@ object KgPipeline {
       decisionStats: DataFrame,
       cached: Seq[DataFrame] = Nil) {
     /** Unpersist every frame this run cached — outputs AND the internal
-      * stage caches (entities/entityB/mentionsPrep/mentionB). Long-lived
-      * sessions running many pipelines must call this (SparkEntry.clearKg
-      * does) or cached frames accumulate across runs. */
+      * stage caches (entities/entityB/mentionsPrep/mentionB). The caller
+      * owns the run: long-lived sessions running many pipelines must call
+      * this or cached frames accumulate across runs. A caller that replaces
+      * an output with a derived copy (SparkEntry's memo checkpoints them)
+      * still releases THIS run, then frees the copies itself. */
     def release(): Unit =
       (Seq(mentions, decisions, components, triples, decisionStats) ++ cached)
         .foreach(_.unpersist(false))
@@ -65,8 +67,10 @@ object KgPipeline {
       val mentionsPrep = Scorer.prepareMentions(mentions, cfg)
         .select(Scorer.mentionPrepCols.map(col): _*).cache()
       cached += mentionsPrep
-      decideTier(spark, mentions, mentionsPrep, entities, entityB, dict.size.toLong, cfg,
-        cached += _)
+      val decided =
+        decideTier(spark, mentions, mentionsPrep, entities, entityB, dict.size.toLong, cfg)
+      cached ++= decided.cached
+      decided.value
     }.persist() // reused by components, triples, stats
 
     val components = cp.stage("components") {
@@ -105,7 +109,11 @@ object KgPipeline {
     *  - larger dictionaries: blocked candidate join (full-surface/n-gram/
     *    type/LSH keys), hot-key salting from a sketch pre-pass, then the
     *    broadcast scorer restricted to the blocked seeds (sweep off) —
-    *    recall is the P/R-gated approximation, cost stays O(pairs). */
+    *    recall is the P/R-gated approximation, cost stays O(pairs).
+    *
+    * The decisions are lazy; the frames persisted to build them (the
+    * blocked tier's mentionB) come back in `cached` for the caller to
+    * release after the decisions are materialized. */
   def decideTier(
       spark: SparkSession,
       mentions: DataFrame,
@@ -113,13 +121,11 @@ object KgPipeline {
       entities: DataFrame,
       entityB: => DataFrame,
       dictSize: Long,
-      cfg: GraftConfig,
-      onCache: DataFrame => Unit = _ => ()): DataFrame =
+      cfg: GraftConfig): Cached[DataFrame] =
     if (dictSize <= cfg.broadcastSweepMaxDict) {
-      Scorer.decideBest(spark, mentionsPrep, None, entities, cfg)
+      Cached(Scorer.decideBest(spark, mentionsPrep, None, entities, cfg), Nil)
     } else {
       val mentionB = Blocking.mentionBlocks(mentionsPrep, cfg).persist()
-      onCache(mentionB)
       // mention-side hot keys: > ~1% of mentions sharing one key => salt
       val mentionCount = math.max(mentions.count(), 1L)
       val hot = Blocking.hotKeySketch(mentionB, math.max(mentionCount / 100, 100L))
@@ -130,8 +136,8 @@ object KgPipeline {
       // driver; decisions bit-identical, the scorer is order-insensitive)
       val pairs = Blocking.candidateSets(spark, mentionB, entityB, cfg, hot,
         numPartitions = Some(nPart))
-      Scorer.decideBest(spark, mentionsPrep, Some(pairs), entities, cfg, sweep = false,
-        numPartitions = Some(nPart))
+      Cached(Scorer.decideBest(spark, mentionsPrep, Some(pairs), entities, cfg, sweep = false,
+        numPartitions = Some(nPart)), Seq(mentionB))
     }
 
   /** Shuffle width for the blocked tier's scoring join, derived from corpus

@@ -69,8 +69,9 @@ object StreamingDedup {
       val oldSets = readIndexPart("sets", batchSets)
       val oldBanded = readIndexPart("banded", batchBanded)
       val pairs = Dedup.incrementalLsh(oldSets, batchSets, tau, numHashes, bands,
-        indexBanded = Some(oldBanded), onCache = cached += _)
-      pairs.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+        indexBanded = Some(oldBanded))
+      cached ++= pairs.cached
+      pairs.value.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
       // only after the pairs landed does the batch join the index (a crash
       // in between replays the batch against the same pre-batch index)
       batchBanded.write.mode("overwrite")

@@ -52,12 +52,10 @@ object StreamingKg {
         // after the sink write — an unbounded stream must not accumulate one
         // cached frame per micro-batch; entities/entityB live for the
         // stream's lifetime by design (dictionary-sized)
-        val batchCached = scala.collection.mutable.ArrayBuffer[DataFrame]()
-        graft.pipeline.KgPipeline
-          .decideTier(spark, mentions, mentionsPrep, entities, entityB, dict.size.toLong, cfg,
-            batchCached += _)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        batchCached.foreach(_.unpersist(false))
+        val decided = graft.pipeline.KgPipeline
+          .decideTier(spark, mentions, mentionsPrep, entities, entityB, dict.size.toLong, cfg)
+        decided.value.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+        decided.release()
       }
   }
 

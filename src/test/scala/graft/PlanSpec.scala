@@ -208,9 +208,9 @@ class PlanSpec extends AnyFunSuite {
     val mentionsPrep = Scorer.prepareMentions(mentions, cfg)
       .select(Scorer.mentionPrepCols.map(col): _*)
     val entities = EntityStore.prepare(spark, dict, cfg)
-    val decisions = KgPipeline.decideTier(spark, mentions, mentionsPrep, entities,
+    val decided = KgPipeline.decideTier(spark, mentions, mentionsPrep, entities,
       Blocking.entityBlocks(entities, cfg), dict.size.toLong, cfg)
-    val p = decisions.queryExecution
+    val p = decided.value.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     // every repartition-by-num operator in the plan carries the derived width
     val reparts = s"REPARTITION_BY_NUM".r.findAllIn(p).size
@@ -221,6 +221,7 @@ class PlanSpec extends AnyFunSuite {
     // and no pinned exchange regressed to the session default
     assert(!"hashpartitioning\\([^)]*, 2\\), REPARTITION_BY_NUM".r.findFirstIn(p).isDefined,
       "a pinned exchange fell back to spark.sql.shuffle.partitions")
+    decided.release()
     mentions.unpersist()
   }
 }

@@ -68,7 +68,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) -> r.getAs[Double]("jaccard")).toMap
 
   test("incrementalLsh: exactly the brute-force >=tau pairs touching a new doc") {
-    val out = collectPairs(Dedup.incrementalLsh(sets(oldRows), sets(newRows), 0.6))
+    val out = collectPairs(Dedup.incrementalLsh(sets(oldRows), sets(newRows), 0.6).value)
     assert(out.keySet == brute.keySet, s"engine=${out.keySet}\nbrute=${brute.keySet}")
     out.foreach { case (k, j) => assert(math.abs(j - brute(k)) < 1e-12, s"$k: $j vs ${brute(k)}") }
     // the planted pins spelled out
@@ -83,18 +83,18 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val idxPath = "/tmp/graft_test_lsh_index"
     Dedup.bandedSignatures(oldS, 64, 16).write.mode("overwrite").parquet(idxPath)
     val viaDisk = collectPairs(Dedup.incrementalLsh(oldS, newS, 0.6,
-      indexBanded = Some(spark.read.parquet(idxPath))))
-    val inMem = collectPairs(Dedup.incrementalLsh(oldS, newS, 0.6))
+      indexBanded = Some(spark.read.parquet(idxPath))).value)
+    val inMem = collectPairs(Dedup.incrementalLsh(oldS, newS, 0.6).value)
     assert(viaDisk == inMem && viaDisk.nonEmpty)
   }
 
   test("equals full-corpus minhashLsh minus old-x-old, and is repartition-stable") {
     val allSets = sets(oldRows ++ newRows.filterNot(n => oldRows.exists(_._1 == n._1)))
     val oldIds = oldRows.map(_._1).toSet
-    val full = collectPairs(Dedup.minhashLsh(allSets, 0.6))
+    val full = collectPairs(Dedup.minhashLsh(allSets, 0.6).value)
       .filterNot { case ((a, b), _) => oldIds(a) && oldIds(b) }
     val inc = collectPairs(Dedup.incrementalLsh(
-      sets(oldRows).repartition(7), sets(newRows).repartition(3), 0.6))
+      sets(oldRows).repartition(7), sets(newRows).repartition(3), 0.6).value)
     assert(inc == full && inc.nonEmpty)
   }
 
@@ -105,7 +105,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(idxPath)
     def sigAggMentions(idx: Option[DataFrame]): (Int, String) = {
       val p = Dedup.incrementalLsh(sets(oldRows), sets(newRows), 0.6, indexBanded = idx)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+        .value.queryExecution.explainString(ExplainMode.fromString("formatted"))
       ("minhashsigagg".r.findAllIn(p.toLowerCase).size, p)
     }
     // plan-text mentions count LINEAGE references (the lazy candidate frame

@@ -59,7 +59,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("minhash-LSH verified pairs equal the exhaustive jaccard join (recall 1 here)") {
     val exhaustive = Dedup.jaccardPairs(sets, 0.6)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.minhashLsh(sets, 0.6)
+    val lsh = Dedup.minhashLsh(sets, 0.6).value
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == exhaustive)
   }
@@ -73,7 +73,7 @@ class OperatorsSpec extends AnyFunSuite {
     val bsets = Dedup.shingleSets(boiler, n = 3, maxDf = 100L).cache()
     val exhaustive = Dedup.jaccardPairs(bsets, 0.6)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.minhashLsh(bsets, 0.6, numHashes = 64, bands = 16)
+    val lsh = Dedup.minhashLsh(bsets, 0.6, numHashes = 64, bands = 16).value
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == exhaustive)
     // the families themselves contribute no pairs (jaccard ~0.2 < 0.6)

@@ -80,7 +80,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
     val streamed = pairSet(spark.read.parquet(out))
     val batch = pairSet(Dedup.minhashLsh(
-      Dedup.shingleSets(docs.toDF("doc_id", "text"), 3, Long.MaxValue), 0.6))
+      Dedup.shingleSets(docs.toDF("doc_id", "text"), 3, Long.MaxValue), 0.6).value)
     assert(batch.nonEmpty)
     // …and at least one planted pair crosses a chunk boundary
     val chunkOf = chunksOf(docs).zipWithIndex
