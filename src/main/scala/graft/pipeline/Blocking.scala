@@ -41,18 +41,14 @@ object Blocking {
     else TextSim.mentionTokens(x1.toLowerCase).distinct.map("w:" + _)
   }
 
-  /** (key, entity_id, channel) blocking index over three channels:
-    *  - "lex": full surface + char n-grams of name/aliases (lexical recall;
-    *    grams above cfg.blockMaxDf entity-df are dropped — all cost, no
-    *    selectivity — the full-surface key keeps exact-surface recall);
-    *  - "type": "t:<type>" for types with <= cfg.typeBlockMaxEntities
-    *    members (the reference's type branch scores every same-type entity,
-    *    disambiguation.py:175-197; the cap keeps mega-types off the
-    *    quadratic path at scale);
+  /** (key, entity_id, channel) blocking index over four channels:
+    *  - "lex": full surface + char n-grams of name/aliases (lexical recall);
+    *  - "type": "t:<type>" (the reference's type branch scores every
+    *    same-type entity, disambiguation.py:175-197);
     *  - "lsh": embedding sign-LSH buckets (the FAISS-retrieval analog);
-    *  - "ctx": df-capped word tokens of the scoring text (X1). This channel
-    *    is the DETERMINISTIC recall floor for context-similar pairs with
-    *    zero name overlap: any pair reaching the decision band without name
+    *  - "ctx": word tokens of the scoring text (X1). This channel is the
+    *    DETERMINISTIC recall floor for context-similar pairs with zero name
+    *    overlap: any pair reaching the decision band without name
     *    similarity needs TF-cosine >= ~0.5 (the weight algebra: final >=
     *    lowThreshold with fuzz=lev=0 forces ce >= (low - bgeW)/ceW), which
     *    means multiple shared tokens — at least one of which is rare enough
@@ -60,64 +56,67 @@ object Blocking {
     *    cosines (recall ~50% per pair at 4x12); the token channel closes
     *    that hole exactly (measured: 17/13312 forced-tier decision
     *    divergences -> 0, app.ChannelRecall).
-    * The channel column exists for recall ACCOUNTING (which channel lost a
-    * candidate — PipelineSpec's per-channel breakdown); candidatePairs
-    * ignores it and dedups pairs across channels.
+    *
+    * ONE key-grouped pass: all channels' (channel, key, id) rows are
+    * unioned and aggregated by (channel, key) into the key's id set and row
+    * count — one exchange for the whole index — and every cap is decided
+    * from that aggregate:
+    *  - lex, ctx: at most cfg.blockMaxDf distinct ids (more is all cost, no
+    *    selectivity); full-surface rows are exempt, which keeps
+    *    exact-surface recall;
+    *  - type: at most min(typeBlockMaxEntities, blockJoinMaxDf) rows (the
+    *    join drops keys above blockJoinMaxDf anyway; the cap keeps
+    *    mega-types off the quadratic path);
+    *  - lsh: uncapped.
+    * The full surface has two spellings: blockKeysUdf's Java trim strips
+    * every char <= U+0020 and its key counts toward df; the exempt row's
+    * Spark trim strips only U+0020. Surfaces padded with tabs or newlines
+    * get both keys.
+    * The channel column is for recall ACCOUNTING (PipelineSpec's
+    * per-channel breakdown); candidatePairs dedups pairs across channels.
     * `entities` must be EntityStore.prepare-d (has x1, emb). */
   def entityBlocks(entities: DataFrame, cfg: GraftConfig): DataFrame = {
-    val keys = blockKeysUdf(cfg)
+    def rows(df: DataFrame, channel: String, key: Column, exempt: Boolean = false) =
+      df.select(lit(channel).as("channel"), key.as("key"), col("id"), lit(exempt).as("exempt"))
     val surfaces = entities
       .select(col("id"), explode(concat(array(col("name")), col("aliases"))).as("surface"))
-    val exploded = surfaces
-      .select(col("id"), explode(keys(col("surface"))).as("key"))
-      .distinct()
-    val fullSurface = surfaces.select(col("id"), lower(trim(col("surface"))).as("key")).distinct()
-    val dfCounts = exploded.groupBy("key").agg(count(lit(1)).as("df"))
-    val grams = exploded.join(dfCounts, "key")
-      .filter(col("df") <= cfg.blockMaxDf)
-      .select("key", "id")
-    val typed = entities.filter(col("entity_type").isNotNull)
-      .select(concat(lit("t:"), col("entity_type")).as("key"), col("id"))
-    val typeCounts = typed.groupBy("key").agg(count(lit(1)).as("tn"))
-    // index cap = min(typeBlockMaxEntities, blockJoinMaxDf): the JOIN drops
-    // keys above blockJoinMaxDf anyway, so type rows in
-    // (blockJoinMaxDf, typeBlockMaxEntities] would be built and shuffled but
-    // never joined — pure index cost for zero recall
     val typeCap = math.min(cfg.typeBlockMaxEntities, cfg.blockJoinMaxDf)
-    val typeKeys = typed.join(typeCounts, "key")
-      .filter(col("tn") <= typeCap).select("key", "id")
-    val lsh = entities.select(col("id"), explode(lshKeysUdf(cfg)(col("emb"))).as("key"))
-      .select("key", "id")
-    val ctx = entities.select(col("id"), explode(ctxTokensUdf(col("x1"))).as("key"))
-      .distinct()
-    val ctxDf = ctx.groupBy("key").agg(count(lit(1)).as("df"))
-    val ctxKeys = ctx.join(ctxDf, "key")
-      .filter(col("df") <= cfg.blockMaxDf)
-      .select("key", "id")
-    grams.union(fullSurface.select("key", "id")).distinct()
-      .withColumn("channel", lit("lex"))
-      .union(typeKeys.distinct().withColumn("channel", lit("type")))
-      .union(lsh.distinct().withColumn("channel", lit("lsh")))
-      .union(ctxKeys.withColumn("channel", lit("ctx")))
+    val keep = when(col("channel") === "type", col("n") <= typeCap)
+      .when(col("channel") === "lsh", lit(true))
+      .otherwise(size(col("ids")) <= cfg.blockMaxDf)
+    Seq(
+      rows(surfaces, "lex", explode(blockKeysUdf(cfg)(col("surface")))),
+      rows(surfaces, "lex", lower(trim(col("surface"))), exempt = true),
+      rows(entities.filter(col("entity_type").isNotNull), "type",
+        concat(lit("t:"), col("entity_type"))),
+      rows(entities, "lsh", explode(lshKeysUdf(cfg)(col("emb")))),
+      rows(entities, "ctx", explode(ctxTokensUdf(col("x1"))))
+    ).reduce(_ union _)
+      .groupBy("channel", "key")
+      .agg(
+        collect_set(when(!col("exempt"), col("id"))).as("ids"),
+        collect_set(when(col("exempt"), col("id"))).as("exempt_ids"),
+        count(lit(1)).as("n"))
+      .select(col("key"),
+        explode(when(keep, array_union(col("ids"), col("exempt_ids")))
+          .otherwise(col("exempt_ids"))).as("id"),
+        col("channel"))
   }
 
-  /** (key, mention_id, channel): same three channels on the mention side.
-    * `mentionsPrep` must carry surface, mention_type and m_emb
+  /** (mention_id, key, channel): the same four channels on the mention side,
+    * uncapped, with the same key spellings; one distinct over their union.
+    * `mentionsPrep` must carry surface, mention_type, m_x1 and m_emb
     * (Scorer.prepareMentions output). */
   def mentionBlocks(mentionsPrep: DataFrame, cfg: GraftConfig): DataFrame = {
-    val keys = blockKeysUdf(cfg)
-    val lexical = mentionsPrep
-      .select(col("mention_id"), explode(keys(col("surface"))).as("key"))
-    val typed = mentionsPrep.filter(col("mention_type").isNotNull)
-      .select(col("mention_id"), concat(lit("t:"), col("mention_type")).as("key"))
-    val lsh = mentionsPrep
-      .select(col("mention_id"), explode(lshKeysUdf(cfg)(col("m_emb"))).as("key"))
-    val ctx = mentionsPrep
-      .select(col("mention_id"), explode(ctxTokensUdf(col("m_x1"))).as("key"))
-    lexical.distinct().withColumn("channel", lit("lex"))
-      .union(typed.select("mention_id", "key").distinct().withColumn("channel", lit("type")))
-      .union(lsh.distinct().withColumn("channel", lit("lsh")))
-      .union(ctx.distinct().withColumn("channel", lit("ctx")))
+    def rows(df: DataFrame, channel: String, key: Column) =
+      df.select(col("mention_id"), key.as("key"), lit(channel).as("channel"))
+    Seq(
+      rows(mentionsPrep, "lex", explode(blockKeysUdf(cfg)(col("surface")))),
+      rows(mentionsPrep.filter(col("mention_type").isNotNull), "type",
+        concat(lit("t:"), col("mention_type"))),
+      rows(mentionsPrep, "lsh", explode(lshKeysUdf(cfg)(col("m_emb")))),
+      rows(mentionsPrep, "ctx", explode(ctxTokensUdf(col("m_x1"))))
+    ).reduce(_ union _).distinct()
   }
 
   /** Distinct (mention_id, entity_id) candidate pairs via the key equi-join,

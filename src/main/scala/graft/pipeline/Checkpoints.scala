@@ -31,16 +31,17 @@ final class Checkpoints(spark: SparkSession, root: Option[String], runId: String
         val df = compute
         df.write.mode(SaveMode.Overwrite).parquet(stageDir(name))
         val back = spark.read.parquet(stageDir(name))
-        // per-partition lineage: rows per parquet file of this stage output
-        val perFile = back
+        // per-partition lineage: rows per parquet file of this stage output;
+        // their sum is the stage's row count, so no second scan counts it
+        val counts = back
           .select(org.apache.spark.sql.functions.input_file_name().as("file"))
           .groupBy("file").count()
           .collect()
+        val perFile = counts
           .map(r => s"""{"file":${jsonStr(r.getString(0))},"rows":${r.getLong(1)}}""")
           .mkString("[", ",", "]")
-        val rows = back.count()
         val manifest =
-          s"""{"stage":${jsonStr(name)},"run_id":${jsonStr(runId)},"rows":$rows,
+          s"""{"stage":${jsonStr(name)},"run_id":${jsonStr(runId)},"rows":${counts.map(_.getLong(1)).sum},
              |"schema":${jsonStr(back.schema.treeString)},"partitions":$perFile,"done":true}""".stripMargin
         Files.createDirectories(manifestPath(name).getParent)
         Files.writeString(manifestPath(name), manifest)

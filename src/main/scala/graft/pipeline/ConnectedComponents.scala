@@ -95,9 +95,6 @@ object ConnectedComponents {
     var liveCp: List[org.apache.spark.rdd.RDD[_]] = checkpointRdd(labels).toList
     var iter = 0
     var converged = false
-    val dbg = sys.env.get("GRAFT_CC_DEBUG").contains("1")
-    var tPrev = System.nanoTime()
-    if (dbg) { bidir.count(); System.err.println(f"[cc] bidir ${(System.nanoTime()-tPrev)/1e9}%.2fs"); tPrev = System.nanoTime() }
     while (!converged && iter < maxIter) {
       val viaNeighbors = bidir
         .join(labels, bidir("src") === labels("id"))
@@ -119,7 +116,6 @@ object ConnectedComponents {
       }
       converged = changed == 0
       iter += 1
-      if (dbg) { System.err.println(f"[cc] round $iter ${(System.nanoTime()-tPrev)/1e9}%.2fs changed=$changed"); tPrev = System.nanoTime() }
     }
     onRounds(iter)
     // sever the result's lineage so bidir and the last in-loop checkpoint

@@ -435,41 +435,44 @@ object Scorer {
 
   /** Dictionary self-dedup edges: blocked entity pairs scoring >= HIGH.
     *
+    * Candidate pairs: ONE key-grouped pass over the entity index gives each
+    * non-null key's sorted id set and row count kdf; keys with
+    * 1 < kdf <= cfg.blockJoinMaxDf (the mention-entity join's ceiling, so
+    * one knob governs both) emit every src < dst pair, then one distinct:
+    * two exchanges. A key shared by hundreds of entities adds df^2/2 pairs
+    * for almost no signal: a same_as pair at HIGH is also held by rarer
+    * surface/n-gram keys (name similarity) or ctx/LSH keys (near-identical
+    * text). Keys over the ceiling are counted ONCE PER KEY in the named
+    * accumulator "graft.dupedges.skipped_keys" (no silent caps; stage
+    * retries re-add); app.MegaDictBench's triple P/R referee measures the
+    * recall effect — 1.0000/1.0000 at a 15k-entity dictionary.
+    *
     * Bound-then-score: the cheap exact components cap the final at
     * (w_bge*bge + w_ce*ce + w_fuzz + w_lev) * typeMult (fuzz/lev <= 1), so a
     * pair whose cap is below HIGH can never be a same_as edge — in
     * particular every type-MISMATCHED pair caps at 0.1 < HIGH. The expensive
     * alias-cross-product edit distances run only on survivors. At
     * mega-dictionary scale (alias surfaces colliding tens-deep, e.g.
-    * abbreviation keys) the blocked self-join is dominated by cross-type and
+    * abbreviation keys) the blocked pairs are dominated by cross-type and
     * low-cosine pairs, and this bound is what keeps the components stage
     * from being the pipeline's top cost (measured 34s -> sub-second wall at
     * a 15k-entity dictionary). Exact: bound >= final always. */
   def entityDupEdges(entityB: DataFrame, entities: DataFrame, cfg: GraftConfig): DataFrame = {
-    // Per-key df cap on the SELF-join (cfg.blockJoinMaxDf — the same ceiling
-    // the mention-entity join enforces, so one knob governs both): a key
-    // shared by hundreds of entities contributes df^2/2 pairs while carrying
-    // almost no signal (a same_as pair at HIGH needs either name similarity —
-    // held by its rarer surface/n-gram keys — or near-identical scoring
-    // text, held by its rarer ctx tokens / LSH buckets). Without the cap the
-    // self-join is Sigma(df^2) over hot keys, the quadratic shape the 100TB
-    // design forbids; skipped keys are counted ONCE PER KEY in the named
-    // accumulator "graft.dupedges.skipped_keys" (no silent caps; standard
-    // caveat: stage retries re-add) and the blocked tier's triple P/R
-    // referee (app.MegaDictBench) measures the actual recall effect —
-    // 1.0000/1.0000 at a 15k-entity dictionary.
     val skipped = entityB.sparkSession.sparkContext
       .longAccumulator("graft.dupedges.skipped_keys")
     val keepKey = udf((kdf: Long) => {
       if (kdf > cfg.blockJoinMaxDf) { skipped.add(1L); false } else kdf > 1
     }).asNondeterministic()
-    val keptKeys = entityB.groupBy("key").agg(count(lit(1)).as("kdf"))
-      .filter(keepKey(col("kdf"))).select("key")
-    val selective = entityB.join(keptKeys, "key").select("key", "id")
-    val a = selective.select(col("key"), col("id").as("src"))
-    val b = selective.select(col("key"), col("id").as("dst"))
-    val pairs = a.join(b, "key").filter(col("src") < col("dst"))
-      .select("src", "dst").distinct()
+    // ids arrive sorted by Spark's string order, so i < j is src < dst
+    val ordered = udf((ids: Seq[String]) =>
+      for (i <- ids.indices; j <- i + 1 until ids.size) yield (ids(i), ids(j)))
+    val pairs = entityB.filter(col("key").isNotNull)
+      .groupBy("key")
+      .agg(count(lit(1)).as("kdf"), sort_array(collect_set(col("id"))).as("ids"))
+      .filter(keepKey(col("kdf")))
+      .select(explode(ordered(col("ids"))).as("p"))
+      .select(col("p._1").as("src"), col("p._2").as("dst"))
+      .distinct()
     val ent = prepareEntities(entities).select(
       col("id"),
       sideStruct(col("name"), col("aliases"), col("entity_type"),

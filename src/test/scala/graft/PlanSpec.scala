@@ -224,4 +224,39 @@ class PlanSpec extends AnyFunSuite {
     decided.release()
     mentions.unpersist()
   }
+
+  test("blocked-tier indexes: one shuffle per index, at most two for the dup-edge pairs") {
+    // each index is ONE key-grouped aggregation; the per-channel
+    // distinct/groupBy/join chains it replaced must not creep back
+    import graft.core.GraftConfig
+    import graft.fixtures.Synth
+    import graft.pipeline.{Blocking, EntityStore, MentionStage, Scorer, TranscriptSource}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    val cfg = GraftConfig.default
+    val spec = Synth.Spec(nConv = 5, turnsPerConv = 4)
+    val dict = Synth.dictionary(spec)
+    val turns = TranscriptSource.fromSeq(spark, Synth.transcripts(spec, dict))
+    val entities = EntityStore.prepare(spark, dict, cfg).cache()
+    val prep = Scorer.prepareMentions(MentionStage.detect(spark, turns, dict).toDF(), cfg)
+      .select(Scorer.mentionPrepCols.map(col): _*).cache()
+    prep.count()
+    // shuffle exchanges of the final (post-AQE) plan, cached inputs excluded
+    val plans = new AdaptiveSparkPlanHelper {}
+    def shuffles(df: DataFrame): Int = {
+      df.collect()
+      plans.collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }.size
+    }
+    val entityB = Blocking.entityBlocks(entities, cfg)
+    assert(shuffles(entityB) == 1, entityB.queryExecution.executedPlan.toString)
+    entityB.cache().count()
+    val mentionB = Blocking.mentionBlocks(prep, cfg)
+    assert(shuffles(mentionB) == 1, mentionB.queryExecution.executedPlan.toString)
+    // the dictionary side of the edge filter broadcasts, so every shuffle
+    // left in the plan belongs to the candidate pairs
+    val edges = Scorer.entityDupEdges(entityB, entities, cfg)
+    assert(shuffles(edges) <= 2, edges.queryExecution.executedPlan.toString)
+    Seq(entityB, prep, entities).foreach(_.unpersist())
+  }
 }

@@ -170,9 +170,24 @@ class PipelineSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_cp2").toString
     KgPipeline.run(spark, TranscriptSource.fromSeq(spark, turns), dict, cfg,
       checkpointRoot = Some(root), runId = "t2")
-    val manifest = Files.readString(java.nio.file.Paths.get(s"$root/mentions.manifest.json"))
-    assert(manifest.contains("\"done\":true"))
-    assert(manifest.contains("\"partitions\":[{\"file\":"))
-    assert(manifest.contains("\"run_id\":\"t2\""))
+    // an empty stage still gets a manifest, with rows 0
+    new Checkpoints(spark, Some(root), "t2").stage("empty")(spark.range(0).toDF())
+    def manifest(stage: String) =
+      Files.readString(java.nio.file.Paths.get(s"$root/$stage.manifest.json"))
+    val m = manifest("mentions")
+    assert(m.contains("\"done\":true"))
+    assert(m.contains("\"partitions\":[{\"file\":"))
+    assert(m.contains("\"run_id\":\"t2\""))
+    val rowsField = "\"rows\":(\\d+)".r
+    Seq("mentions", "decisions", "components", "triples", "empty").foreach { stage =>
+      val text = manifest(stage)
+      val (top, parts) = text.splitAt(text.indexOf("\"partitions\":"))
+      val rows = rowsField.findFirstMatchIn(top).map(_.group(1).toLong)
+      val perFile = rowsField.findAllMatchIn(parts).map(_.group(1).toLong).sum
+      val counted = spark.read.parquet(s"$root/$stage").count()
+      assert(rows.contains(perFile) && perFile == counted,
+        s"$stage: rows=$rows per-file sum=$perFile count=$counted")
+    }
+    assert(rowsField.findFirstMatchIn(manifest("empty")).map(_.group(1)).contains("0"))
   }
 }
